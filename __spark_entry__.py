@@ -176,14 +176,11 @@ def entry(spark: SparkSession) -> DataFrame:
     the exploded violations table under stable (conv_id, turn_idx) order."""
     sf_dir = "/root/testdata/sf0.001"
     events = _load(spark, sf_dir, "events")
-    t = transcripts_from_events(events)
+    # persist: derived fixture input (see _q_transcript_violations)
+    t = transcripts_from_events(events).persist()
     run = ValidationRun(_engine())
     res = run.run(
-        spark,
-        t,
-        conversations=conversations_dim(events),
-        tools=tools_dim(spark),
-        persist_input=True,  # derived fixture input (see _q_transcript_violations)
+        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
     )
     return res.violations
 
@@ -298,14 +295,11 @@ FROM t WHERE tool IS NOT NULL AND tool NOT IN {TOOLS_IN}
 
 def _q_partition_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _load(spark, sf_dir, "events")
-    t = transcripts_from_events(events)
+    # persist: derived input + branch fan-out (see _q_transcript_violations)
+    t = transcripts_from_events(events).persist()
     run = ValidationRun(_engine())
     res = run.run(
-        spark,
-        t,
-        conversations=conversations_dim(events),
-        tools=tools_dim(spark),
-        persist_input=True,  # derived input + branch fan-out (see above)
+        spark, t, conversations=conversations_dim(events), tools=tools_dim(spark)
     )
     return res.verdicts
 
@@ -348,7 +342,7 @@ SELECT r.part,
        CAST(r.n_schema_viol + coalesce(c.n_check, 0) AS BIGINT) AS n_violations,
        CAST(r.n_invalid_rows AS BIGINT) AS n_invalid_rows,
        CAST(r.n_rows AS BIGINT) AS n_rows
-FROM rowv r LEFT JOIN checks c ON r.part = c.part
+FROM rowv r LEFT JOIN checks c ON r.part IS NOT DISTINCT FROM c.part
 """
 
 

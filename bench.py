@@ -8,7 +8,8 @@ Prints ONE JSON line:
 
 The headline metric follows BASELINE.json: validated turns/sec = rows of
 the transcripts table fully processed by the flagship validation run
-(row checks + uniqueness + RI + verdicts) divided by its wall time.
+(row checks + uniqueness + RI + verdicts, written to a temp dir by
+ValidationRun.run_and_write) divided by its wall time.
 Run with SPARK_GRAFT_CPUS at two levels (e.g. 8 and 32) on the same input
 to evidence the north_rule scaling criterion (see BENCH/BASELINE.md).
 """
@@ -146,7 +147,6 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from pacts_spark.registry import SchemaRegistry
     from pacts_spark.runner import ValidationRun
     from pacts_spark.transcripts import tools_dim, transcripts_from_events
 
@@ -194,11 +194,9 @@ def main() -> None:
         tools = tools_dim(spark)
 
         def pipeline():
-            res = run.run(spark, t, conversations=convs, tools=tools)
-            res.violations.persist()
-            res.violations.count()
-            res.verdicts.collect()
-            res.violations.unpersist()
+            # the production path (jobs/validate_job.py): violations and
+            # verdicts written to disk
+            run.run_and_write(spark, t, f"{base}/out", conversations=convs, tools=tools)
 
         pipeline()  # warm-up: plan codegen + page cache
         best = float("inf")

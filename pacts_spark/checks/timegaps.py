@@ -41,131 +41,6 @@ def ts_gaps(
     return df.withColumn("gap_seconds", as_sec(F.col(ts_col)) - as_sec(prev))
 
 
-class TDigest:
-    """Minimal deterministic t-digest (merging variant, k1-style size
-    bound): mergeable centroid sketch for quantiles over unbounded
-    streams. Public-knowledge algorithm (Dunning & Ertl, "Computing
-    extremely accurate quantiles using t-digests").
-
-    Determinism: input buffers are sorted before compression and
-    compression is a single left-to-right pass, so the same multiset of
-    values always yields the same centroids regardless of arrival order.
-    """
-
-    __slots__ = ("delta", "means", "weights")
-
-    def __init__(self, delta: int = 100):
-        self.delta = delta
-        self.means: list[float] = []
-        self.weights: list[float] = []
-
-    def add_sorted(self, values, weights=None) -> None:
-        if weights is None:
-            weights = [1.0] * len(values)
-        merged_m = []
-        merged_w = []
-        i = j = 0
-        while i < len(self.means) or j < len(values):
-            if j >= len(values) or (
-                i < len(self.means) and self.means[i] <= values[j]
-            ):
-                merged_m.append(self.means[i]); merged_w.append(self.weights[i]); i += 1
-            else:
-                merged_m.append(float(values[j])); merged_w.append(float(weights[j])); j += 1
-        self._compress(merged_m, merged_w)
-
-    def merge(self, other: "TDigest") -> "TDigest":
-        self.add_sorted(other.means, other.weights)
-        return self
-
-    def _compress(self, means, weights) -> None:
-        total = sum(weights)
-        if not means:
-            self.means, self.weights = [], []
-            return
-        out_m = [means[0]]
-        out_w = [weights[0]]
-        cum = 0.0
-        for m, w in zip(means[1:], weights[1:]):
-            q0 = cum / total
-            q2 = (cum + out_w[-1] + w) / total
-            # k1 size bound approximation: centroid may absorb while the
-            # spanned quantile range stays under 1/delta scaled by 4q(1-q)
-            limit = 4.0 * total * max(q0, 1e-12) * max(1.0 - q2, 1e-12) / self.delta
-            if out_w[-1] + w <= max(limit, 1.0):
-                out_m[-1] = (out_m[-1] * out_w[-1] + m * w) / (out_w[-1] + w)
-                out_w[-1] += w
-            else:
-                cum += out_w[-1]
-                out_m.append(m)
-                out_w.append(w)
-        self.means, self.weights = out_m, out_w
-
-    def quantile(self, q: float) -> float:
-        if not self.means:
-            return float("nan")
-        total = sum(self.weights)
-        target = q * total
-        cum = 0.0
-        for i, w in enumerate(self.weights):
-            if cum + w >= target:
-                return self.means[i]
-            cum += w
-        return self.means[-1]
-
-
-def gap_quantiles_tdigest(
-    df: DataFrame,
-    partition_col: Column | str | None = None,
-    quantiles: list[float] = (0.5, 0.9, 0.99),
-    delta: int = 200,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """t-digest gap quantiles per partition via applyInPandas — the
-    custom-sketch path the north_star names explicitly.
-
-    Sandbox shape: one grouped Arrow batch per partition builds one
-    digest. At 100 TB the same TDigest.merge makes it a two-level
-    treeAggregate: per-task partial digests → merged per partition (the
-    class is mergeable and deterministic); Spark's built-in
-    percentile_approx (used by :func:`gap_quantiles`) is the JVM-side
-    equivalent and remains the default hot path.
-    """
-    import pandas as pd
-
-    gaps = ts_gaps(df, conv_col, order_col, ts_col).filter(
-        F.col("gap_seconds").isNotNull()
-    )
-    if partition_col is None:
-        gaps = gaps.withColumn("part", F.lit("__all__"))
-    else:
-        pcol = (
-            F.col(partition_col) if isinstance(partition_col, str) else partition_col
-        )
-        gaps = gaps.withColumn("part", pcol.cast("string"))
-    qlist = list(quantiles)
-
-    def digest(pdf: pd.DataFrame) -> pd.DataFrame:
-        td = TDigest(delta=delta)
-        td.add_sorted(sorted(pdf["gap_seconds"].tolist()))
-        row = [pdf["part"].iloc[0]] + [
-            round(td.quantile(q), 6) for q in qlist
-        ] + [len(pdf)]
-        cols = ["part"] + [f"p{int(q * 100)}" for q in qlist] + ["n_gaps"]
-        return pd.DataFrame([row], columns=cols)
-
-    schema = (
-        "part string, "
-        + ", ".join(f"p{int(q * 100)} double" for q in qlist)
-        + ", n_gaps long"
-    )
-    return gaps.select("part", "gap_seconds").groupBy("part").applyInPandas(
-        digest, schema
-    )
-
-
 def gap_quantiles_discrete(
     df: DataFrame,
     partition_col: Column | str | None = None,

@@ -13,14 +13,12 @@ Mirrors PactsService (PactsService.java:18-169; rust/src/impl/service.rs:7-102):
 - ``send_validated(df, ...)``            ≙ PactsService.sendValidatedData
   (PactsService.java:106-122): gate — valid rows reach the sink, any
   violation raises ``ValidationException("Validation failed: ...")``.
-- ``explode_violations`` / ``partition_verdicts`` — the north_star outputs:
-  exploded violation rows under stable ``(conv_id, turn_idx)`` ordering and
-  per-partition pass/fail verdicts (ValidationResult.valid lifted from row
-  to partition).
+- ``explode_violations`` — the north_star output: exploded violation rows
+  under stable ``(conv_id, turn_idx)`` ordering. Per-partition verdicts
+  are built by ``runner.ValidationRun``.
 
 Execution model: the schema compiles ONCE on the driver into a fused
-single-projection plan (no shuffle for row checks); verdict aggregation is
-the only shuffle, keyed by the table's partition column so AQE coalesces it.
+single-projection plan (no shuffle for row checks).
 """
 
 from __future__ import annotations
@@ -189,23 +187,4 @@ class PactsEngine:
         # files without a single-partition bottleneck at scale
         return exploded.repartitionByRange(*key_cols).sortWithinPartitions(
             *key_cols, "error_idx"
-        )
-
-    @staticmethod
-    def partition_verdicts(
-        validated: DataFrame, partition_col: Column | str, alias: str = "part"
-    ) -> DataFrame:
-        """Per-partition pass/fail verdict (ValidationResult.valid lifted to
-        partition granularity — SURVEY.md §2.4). One shuffle keyed by the
-        table partition column (AQE coalesces); partial aggregation does the
-        heavy lifting map-side."""
-        pcol = F.col(partition_col) if isinstance(partition_col, str) else partition_col
-        return (
-            validated.groupBy(pcol.alias(alias))
-            .agg(
-                F.every("valid").alias("pass"),
-                F.sum(F.size("errors")).alias("n_violations"),
-                F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
         )

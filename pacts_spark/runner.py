@@ -1,34 +1,28 @@
 """ValidationRun — the end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle).
 
 source scan (pending partitions only) → fused row-check projection →
-fork: violations (explode, stable order) / per-partition verdicts →
-engine checks (uniqueness, referential, drift, gaps, stats) →
-combined per-partition verdict → manifest record.
+violations: schema errors (explode) ∪ hash uniqueness ∪ referential
+anti-joins (conversations, tools), under ONE range sort on
+(conv_id, turn_idx) → per-partition verdicts → manifest record.
 
-One scan feeds everything; shuffles: uniqueness groupBy (salted),
-verdict/histogram groupBys (partition-keyed, AQE-coalesced), the lag
-window (conv-keyed). RI joins are broadcast. At 100 TB each stage's
-shuffle carries aggregates, not rows — the only row-volume movement is
-the window for ts-gaps and the violations sort, both keyed to stay skew-
-safe (salting + repartitionByRange).
+``run()`` builds these lazily; ``run_and_write()`` (the production path,
+``jobs/validate_job.py``) writes the violations, derives the verdicts with
+the same :func:`_verdicts` from the written table, then records the
+manifest. Shuffles: the uniqueness groupBy on an 8-byte key hash (map-side
+combined), the range sort of the unioned violations, and the two
+partition-keyed verdict aggregates (kilobytes, AQE-coalesced). RI joins
+are broadcast. The only row-volume movement is the violations sort.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pacts_spark.checkpoint import ValidationManifest
-from pacts_spark.checks import (
-    category_histogram,
-    column_stats,
-    drift_scores,
-    gap_quantiles,
-    ri_violations,
-    uniqueness_violations,
-)
+from pacts_spark.checks import ri_violations, uniqueness_violations
 from pacts_spark.engine import PactsEngine
 
 
@@ -37,10 +31,6 @@ class RunResult:
     validated: DataFrame
     violations: DataFrame
     verdicts: DataFrame
-    stats: DataFrame
-    drift: DataFrame
-    gaps: DataFrame
-    extras: dict = field(default_factory=dict)
 
 
 def day_part(ts_col: str = "ts") -> Column:
@@ -51,6 +41,25 @@ def day_part(ts_col: str = "ts") -> Column:
     CPU consumer at 4M rows). Group/join on the 4-byte date; stringify
     only tiny aggregated outputs (checkpoint.record does)."""
     return F.to_date(F.col(ts_col))
+
+
+def _verdicts(validated: DataFrame, violations: DataFrame, part: Column) -> DataFrame:
+    """Per-partition verdict (ValidationResult.valid lifted to partition
+    granularity — SURVEY.md §2.4): row counts from ``validated``, violation
+    counts from ``violations``. The join is null-safe: a NULL-ts row lands
+    in the NULL partition, and a plain equi-join would drop that
+    partition's violations (NULL never equals NULL) and pass it."""
+    rows = validated.groupBy(part.alias("part")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
+    )
+    counts = violations.groupBy(F.col("part").alias("v_part")).agg(
+        F.count(F.lit(1)).alias("n_violations")
+    )
+    n = F.coalesce(F.col("n_violations"), F.lit(0).cast("long"))
+    return rows.join(counts, rows["part"].eqNullSafe(counts["v_part"]), "left").select(
+        "part", (n == 0).alias("pass"), n.alias("n_violations"), "n_invalid_rows", "n_rows"
+    )
 
 
 class ValidationRun:
@@ -72,165 +81,74 @@ class ValidationRun:
         transcripts: DataFrame,
         conversations: DataFrame | None = None,
         tools: DataFrame | None = None,
-        baseline_role_hist: DataFrame | None = None,
-        persist_input: bool = False,
         pending_filtered: bool = False,
-        sequence_checks: bool = False,
-        shape_checks: bool = False,
-        shape_kwargs: dict | None = None,
     ) -> RunResult:
+        """Lazy validated rows, violations and verdicts. The input should be
+        a materialized table: each action re-evaluates it, so a caller
+        with an expensive derived input persists it first.
+
+        Does NOT record to the manifest — recording before the outputs are
+        durably written would let a crash mark partitions 'validated' whose
+        verdict/violation rows were never persisted (a resumed run would
+        then skip them forever). ``run_and_write()`` records after its
+        writes; other callers call ``manifest.record(res.verdicts, ...)``
+        once their sinks commit."""
         part = day_part()
 
         # pending_filtered=True: the caller already excluded validated
-        # partitions (run_and_write's pre-filter, or a table adapter's
-        # partition-pruned scan_pending) — don't anti-join a second time
+        # partitions (a table adapter's partition-pruned scan_pending) —
+        # don't anti-join a second time
         if self.manifest is not None and not pending_filtered:
             transcripts = self.manifest.filter_pending(spark, transcripts, part)
-
-        # The run fans out into several ACTIONS (violations, verdicts,
-        # stats, drift, gaps) sharing the same input lineage, and Spark
-        # reuses exchanges only within one physical plan — so each action
-        # re-evaluates the input. The right input is therefore a
-        # MATERIALIZED table (parquet/Iceberg scan: cheap, parallel,
-        # OS/page-cache friendly), which is what the engine's contract
-        # assumes. persist_input=True exists for inputs that are expensive
-        # derivations, but measured at 4M rows the columnar cache build
-        # (dictionary-encoding text columns) costs more than re-running a
-        # window — prefer materializing instead.
-        if persist_input:
-            transcripts = transcripts.persist()
 
         # ---- row-level schema checks (one fused projection, no shuffle)
         validated = self.engine.validate_data(transcripts, self.category, self.name)
 
-        # ---- violations fork: row checks + engine checks, unioned in one
-        #      (conv_id, turn_idx, check, violation) shape. No per-branch
-        #      sort here — ONE repartitionByRange after the union (sorting
-        #      each branch separately would range-partition twice).
-        row_viol = (
-            validated.filter(F.size("errors") > 0)
-            .select(
+        # ---- violations: row checks + engine checks, unioned in one
+        #      (conv_id, turn_idx, part, check, violation) shape. No
+        #      per-branch sort — ONE repartitionByRange after the union
+        #      (sorting each branch would range-partition twice).
+        viol_parts = [
+            validated.filter(F.size("errors") > 0).select(
                 "conv_id",
                 "turn_idx",
                 part.alias("part"),
                 F.lit("schema").alias("check"),
                 F.explode("errors").alias("violation"),
-            )
-        )
-
-        # method="hash": phase-1 shuffle carries (8-byte hash, count)
-        # instead of the string key tuple — measured 20% faster at 16M rows
-        # locally and ~4x fewer shuffle bytes (the win grows with network
-        # shuffle); map-side combine absorbs hot keys, exact tail verify.
-        # The salted two-phase stays available (and oracle-covered via
-        # transcript_violations) for engines/keys where hashing is
-        # undesirable.
-        uniq = uniqueness_violations(
-            transcripts, ["conv_id", "turn_idx"], method="hash"
-        ).select(
-            "conv_id", "turn_idx", part.alias("part"),
-            F.lit("uniqueness").alias("check"), "violation",
-        )
-
-        viol_parts = [row_viol, uniq]
-        if sequence_checks:
-            # opt-in (default off keeps existing outputs byte-stable):
-            # gap / ts-regression / role-stutter rows from ONE conv-keyed
-            # window exchange (checks/sequence.py)
-            from pacts_spark.checks.sequence import sequence_violations
-
-            viol_parts.append(
-                sequence_violations(
-                    transcripts.withColumn("part", part), passthrough=("part",)
-                ).select(
-                    "conv_id", "turn_idx", "part",
-                    F.col("check_name").alias("check"), "violation",
+            ),
+            # method="hash": phase-1 shuffle carries (8-byte hash, count)
+            # instead of the string key tuple — measured 20% faster at 16M
+            # rows and ~4x fewer shuffle bytes; map-side combine absorbs
+            # hot keys, exact tail verify
+            uniqueness_violations(
+                transcripts, ["conv_id", "turn_idx"], method="hash"
+            ).select(
+                "conv_id", "turn_idx", part.alias("part"),
+                F.lit("uniqueness").alias("check"), "violation",
+            ),
+        ]
+        for dim, key, check in (
+            (conversations, "conv_id", "referential_conv"),
+            (tools, "tool", "referential_tool"),
+        ):
+            if dim is not None:
+                viol_parts.append(
+                    ri_violations(transcripts, dim, key).select(
+                        "conv_id", "turn_idx", part.alias("part"),
+                        F.lit(check).alias("check"), "violation",
+                    )
                 )
-            )
-        if shape_checks:
-            # opt-in conversation-LEVEL contracts (opener/closer role,
-            # length bounds): ONE conv-keyed aggregate, endpoint structs
-            # combine map-side (checks/sequence.py). The violation row
-            # carries the ANCHOR turn's partition (a conversation may
-            # span parts; the opener anchors open/too-short rows, the
-            # closer anchors close/too-long rows).
-            from pacts_spark.checks.sequence import conversation_shape_violations
-
-            viol_parts.append(
-                conversation_shape_violations(
-                    transcripts, part_col=part, **(shape_kwargs or {})
-                ).select(
-                    "conv_id", "turn_idx", F.col("part").cast("date").alias("part"),
-                    F.col("check_name").alias("check"), "violation",
-                )
-            )
-        if conversations is not None:
-            viol_parts.append(
-                ri_violations(transcripts, conversations, "conv_id").select(
-                    "conv_id", "turn_idx", part.alias("part"),
-                    F.lit("referential_conv").alias("check"), "violation",
-                )
-            )
-        if tools is not None:
-            viol_parts.append(
-                ri_violations(transcripts, tools, "tool").select(
-                    "conv_id", "turn_idx", part.alias("part"),
-                    F.lit("referential_tool").alias("check"), "violation",
-                )
-            )
-        violations = viol_parts[0]
+        unioned = viol_parts[0]
         for v in viol_parts[1:]:
-            violations = violations.unionByName(v)
-        violations = violations.repartitionByRange(
-            "conv_id", "turn_idx"
-        ).sortWithinPartitions("conv_id", "turn_idx", "check", "violation")
-
-        # ---- per-partition verdict: row verdicts + per-check counts
-        row_verd = self.engine.partition_verdicts(validated, part)
-        extra_counts = (
-            violations.filter(F.col("check") != "schema")
-            .groupBy("part")
-            .agg(F.count(F.lit(1)).alias("n_check_violations"))
-        )
-        verdicts = (
-            row_verd.join(extra_counts, "part", "left")
-            .fillna(0, subset=["n_check_violations"])
-            .withColumn(
-                "n_violations", F.col("n_violations") + F.col("n_check_violations")
-            )
-            .withColumn("pass", F.col("pass") & (F.col("n_check_violations") == 0))
-            .drop("n_check_violations")
-        )
-
-        # ---- metrics
-        stats = column_stats(
-            transcripts,
-            ["conv_id", "turn_idx", "role", "text", "tool"],
-            partition_col=part,
-        )
-        role_hist = category_histogram(transcripts, "role", part)
-        baseline = (
-            baseline_role_hist
-            if baseline_role_hist is not None
-            else category_histogram(transcripts, "role")
-        )
-        drift = drift_scores(role_hist, baseline)
-        gaps = gap_quantiles(transcripts, partition_col=part)
-
-        # NOTE: run() does NOT record to the manifest — recording before the
-        # outputs are durably written would let a crash mark partitions
-        # 'validated' whose verdict/violation rows were never persisted (a
-        # resumed run would then skip them forever). Callers record AFTER
-        # persisting outputs: run_and_write() does, or call
-        # ``manifest.record(res.verdicts, ...)`` once your sinks commit.
+            unioned = unioned.unionByName(v)
+        # the verdict counts read the unsorted union: per-part counts need
+        # no range sort (nor its sampling job)
         return RunResult(
             validated=validated,
-            violations=violations,
-            verdicts=verdicts,
-            stats=stats,
-            drift=drift,
-            gaps=gaps,
-            extras={"input": transcripts} if persist_input else {},
+            violations=unioned.repartitionByRange(
+                "conv_id", "turn_idx"
+            ).sortWithinPartitions("conv_id", "turn_idx", "check", "violation"),
+            verdicts=_verdicts(validated, unioned, part),
         )
 
     def run_and_write(
@@ -244,59 +162,34 @@ class ValidationRun:
         seq: int = 0,
         pending_filtered: bool = False,
     ) -> dict:
-        """Production-shaped run: MINIMUM number of actions.
-
-        ``run()`` returns five lazy DataFrames; collecting each separately
-        re-evaluates shared lineage and pays per-action driver/stage
-        scheduling overhead (measured ~5-8s per action regardless of data
-        size — the Amdahl term that caps scaling). This variant:
+        """Production run: ``run()`` written with the minimum number of
+        actions (each costs seconds of driver/stage overhead regardless of
+        data size):
 
           action 1: write the violations table (the only full-data pass —
                     all check branches evaluate inside ONE job);
-          action 2: per-partition verdicts = cheap row-count agg over the
-                    input joined with violation counts read back from the
-                    WRITTEN violations (kilobytes), then manifest record.
+          action 2: write the verdicts — ``_verdicts`` over the validated
+                    rows and the violation rows read back from the WRITTEN
+                    table (no second evaluation of the check branches);
+          action 3: record the verdicts in the manifest, only after both
+                    writes succeeded (see ``run()`` on resume ordering).
 
         Returns {"violations_path", "verdicts_path"}.
         """
-        part = day_part()
-        if self.manifest is not None and not pending_filtered:
-            transcripts = self.manifest.filter_pending(spark, transcripts, part)
-
         res = self.run(
             spark,
             transcripts,
             conversations=conversations,
             tools=tools,
-            persist_input=False,
-            pending_filtered=True,  # filtered just above (or by the caller)
+            pending_filtered=pending_filtered,
         )
-        # manifest.record happens ONLY after both output writes succeed
-        # (below) — see run()'s note on crash-safe resume ordering.
         vio_path = f"{out_dir}/violations"
         res.violations.write.mode("overwrite").parquet(vio_path)
 
-        written = spark.read.parquet(vio_path)
-        vio_counts = written.groupBy("part").agg(
-            F.count(F.lit(1)).alias("n_violations"),
-        )
-        # n_invalid_rows comes from the VALIDATED frame (same fused
-        # projection run() aggregates), not from the written violation
-        # rows: distinct-(conv_id,turn_idx) over exploded rows undercounts
-        # when duplicate-key rows each carry schema errors, and a
-        # violation-free partition must read 0, not NULL
-        validated = self.engine.validate_data(transcripts, self.category, self.name)
-        row_counts = validated.groupBy(part.alias("part")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("valid")).cast("long")).alias("n_invalid_rows"),
-        )
-        verdicts = (
-            row_counts.join(vio_counts, "part", "left")
-            .fillna(0, subset=["n_violations"])
-            .withColumn("pass", F.col("n_violations") == 0)
-        )
         verd_path = f"{out_dir}/verdicts"
-        verdicts.write.mode("overwrite").parquet(verd_path)
+        _verdicts(res.validated, spark.read.parquet(vio_path), day_part()).write.mode(
+            "overwrite"
+        ).parquet(verd_path)
         if self.manifest is not None:
             self.manifest.record(
                 spark.read.parquet(verd_path), run_id=run_id, seq=seq

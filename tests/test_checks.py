@@ -131,40 +131,6 @@ def test_gap_quantiles_detects_out_of_order(spark):
     assert q.n_negative_gaps == 1
 
 
-def test_tdigest_quantiles_close_to_exact(spark, transcripts):
-    from pacts_spark.checks.timegaps import TDigest, gap_quantiles_tdigest
-
-    # unit: digest of 1..1000 approximates true quantiles
-    td = TDigest(delta=200)
-    td.add_sorted(list(range(1, 1001)))
-    assert abs(td.quantile(0.5) - 500) < 25
-    assert abs(td.quantile(0.99) - 990) < 15
-    # mergeability: two halves merged == same ballpark
-    a, b = TDigest(200), TDigest(200)
-    a.add_sorted(list(range(1, 501)))
-    b.add_sorted(list(range(501, 1001)))
-    a.merge(b)
-    assert abs(a.quantile(0.5) - 500) < 30
-    # determinism: same multiset, different split → same centroids
-    c, d = TDigest(200), TDigest(200)
-    c.add_sorted(list(range(1, 1001)))
-    d.add_sorted(list(range(1, 1001)))
-    assert c.means == d.means and c.weights == d.weights
-
-    # end-to-end: per-part digest quantiles track exact percentiles
-    from pacts_spark.checks.timegaps import gap_quantiles
-    from pacts_spark.runner import day_part
-
-    approx = {r.part: r for r in gap_quantiles_tdigest(
-        transcripts, partition_col=day_part()).collect()}
-    exact = {str(r.part): r for r in gap_quantiles(
-        transcripts, partition_col=day_part(), exact=True).collect()}
-    assert set(approx) == set(exact)
-    for part, e in exact.items():
-        spread = max(abs(e.max_gap), 1.0)
-        assert abs(approx[part].p50 - e.p50) <= 0.2 * spread
-
-
 def test_uniqueness_no_broadcast_mass_duplicates(spark):
     """broadcast_dups=False path: a pathologically duplicated input (every
     key duplicated) must run WITHOUT the broadcast hint — AQE/stats pick

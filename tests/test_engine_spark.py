@@ -153,17 +153,6 @@ def test_explode_violations_order(spark, engine):
     ]
 
 
-def test_partition_verdicts(spark, engine):
-    df = spark.createDataFrame(
-        [("p1", 1, "m", 2.0), ("p1", None, "m", 2.0), ("p2", 3, "m", 4.0)],
-        "part string, slot int, material string, amount double",
-    )
-    v = engine.validate_data(df, "inventory", "inventory_item")
-    out = {r.part: r for r in engine.partition_verdicts(v, "part").collect()}
-    assert out["p1"]["pass"] is False and out["p1"].n_violations == 1
-    assert out["p2"]["pass"] is True and out["p2"].n_rows == 1
-
-
 def test_send_validated_gate(spark, engine):
     good = spark.createDataFrame([(1, "m", 2.0)], "slot int, material string, amount double")
     sent = []

@@ -37,8 +37,6 @@ def test_full_run_shapes(spark, engine, events_small, transcripts):
     # totals line up: verdict counts == violations table counts
     n_viol = res.violations.count()
     assert sum(r.n_violations for r in verd) == n_viol
-    assert res.drift.count() == res.verdicts.count()
-    assert res.gaps.count() == res.verdicts.count()
 
 
 def test_violations_are_ordered_and_exact(spark, engine, transcripts):
@@ -120,37 +118,44 @@ def test_run_and_write(spark, engine, transcripts, tmp_path):
     # verdict totals must agree with the written violations
     tot_v = verd.agg(F.sum("n_violations")).collect()[0][0]
     assert tot_v == vio.count()
-    # equivalence with the lazy run(): same per-part violation counts
+    # equivalence with the lazy run(): same verdict rows, all five columns
     res = ValidationRun(engine).run(spark, transcripts, tools=tools_dim(spark))
-    lazy_counts = {
-        str(r.part): r.n_violations for r in res.verdicts.collect()
-    }
-    written_counts = {str(r.part): r.n_violations for r in verd.collect()}
-    assert lazy_counts == written_counts
+    lazy = {str(r.part): r.asDict() for r in res.verdicts.collect()}
+    assert lazy == {str(r.part): r.asDict() for r in verd.collect()}
 
 
-def test_run_sequence_checks_opt_in(spark, engine, transcripts):
-    res = ValidationRun(engine).run(spark, transcripts, sequence_checks=True)
-    seq = res.violations.filter(F.col("check") == "sequence")
-    n = seq.count()
-    assert n > 0  # the derived fixture injects gaps/regressions by design
-    kinds = {r.violation.split(" ")[0] for r in seq.limit(200).collect()}
-    assert kinds <= {"Missing", "Timestamp", "Role"}
-    # default-off keeps existing outputs byte-stable
-    res_off = ValidationRun(engine).run(spark, transcripts)
-    assert res_off.violations.filter(F.col("check") == "sequence").count() == 0
+def test_null_ts_partition_verdicts(spark, engine, tmp_path):
+    """Rows with a NULL ts fall in the NULL day partition. Its verdict must
+    count every violation there, schema and referential, and fail, on
+    both the lazy and the written path (a plain equi-join on part drops
+    the NULL partition's violations and passes it)."""
+    import datetime as dt
 
-
-def test_run_shape_checks_opt_in(spark, engine, transcripts):
-    res = ValidationRun(engine).run(
-        spark, transcripts, shape_checks=True,
-        shape_kwargs={"close_roles": ("assistant",), "min_turns": 5},
+    ts = dt.datetime(2025, 1, 1, 12)
+    t = spark.createDataFrame(
+        [
+            ("c1", 0, "user", "hi", None, ts),
+            ("c1", 1, "assistant", "yo", "tool-1", ts),
+            ("c2", 0, "user", None, None, None),
+            ("c2", 1, "assistant", "ok", "tool-6", None),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp_ntz",
     )
-    sh = res.violations.filter(F.col("check") == "shape")
-    rows = sh.limit(500).collect()
-    assert rows  # fixture conversations don't all end with assistant
-    assert all(r.violation.startswith("Conversation") for r in rows)
-    assert all(r.part is not None for r in rows)  # anchor part carried
-    # default-off keeps existing outputs byte-stable
-    res_off = ValidationRun(engine).run(spark, transcripts)
-    assert res_off.violations.filter(F.col("check") == "shape").count() == 0
+    expected = {
+        # 2 missing ts + 1 missing text + 1 orphan tool
+        None: (False, 4, 2, 2),
+        dt.date(2025, 1, 1): (True, 0, 0, 2),
+    }
+    res = ValidationRun(engine).run(spark, t, tools=tools_dim(spark))
+    assert res.verdicts.columns == [
+        "part", "pass", "n_violations", "n_invalid_rows", "n_rows"]
+    assert {r.part: tuple(r)[1:] for r in res.verdicts.collect()} == expected
+
+    run = ValidationRun(engine, manifest=ValidationManifest(tmp_path / "m"))
+    out = run.run_and_write(spark, t, str(tmp_path / "out"), tools=tools_dim(spark))
+    written = spark.read.parquet(out["verdicts_path"])
+    assert {r.part: tuple(r)[1:] for r in written.collect()} == expected
+    # the manifest records the NULL partition as failed, not validated
+    done = [r.part for r in run.manifest.validated_parts(spark).collect()]
+    assert done == ["2025-01-01"]
